@@ -5,6 +5,8 @@ supersonic_spark operator layer) on sf0.001.
 ``queries()`` / ``oracle_sql()`` — the full catalog from
 supersonic_spark.queries (one entry per implemented operator from
 SURVEY.md §2 plus the training-data pipeline operators).
+``operators()`` — the same names mapped to the operator plan a user runs
+(what the benchmarks time); ``queries()`` wraps it in its oracle check.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from supersonic_spark.queries import REGISTRY  # noqa: E402
+from supersonic_spark.queries import OPERATORS, REGISTRY  # noqa: E402
 import supersonic_spark.queries_expr  # noqa: E402,F401  (registers)
 import supersonic_spark.queries_pipeline  # noqa: E402,F401  (registers)
 import supersonic_spark.queries_tpch  # noqa: E402,F401  (registers)
@@ -236,6 +238,12 @@ _PRIORITY: list[str] = list(
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ pipeline)."""
     return {name: REGISTRY[name][0] for name in _ordered()}
+
+
+def operators() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The operator plan per name, without its oracle check — identical to
+    ``queries()`` for every name registered without a check."""
+    return {name: OPERATORS[name] for name in _ordered()}
 
 
 def oracle_sql() -> dict[str, str]:

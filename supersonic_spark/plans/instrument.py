@@ -7,12 +7,12 @@ timing per Next() call.  Spark's native equivalents:
 - ``spy(df, name, *metrics)`` → ``df.observe`` — zero-cost aggregate
   wiretap evaluated during the job (rows_processed ≈ count, plus any
   aggregate expression);
-- ``BenchmarkListener`` → QueryExecutionListener capturing per-query wall
-  time and observed metrics (the benchmark.proto vocabulary: wall time,
-  rows processed, rows/s).
+- ``benchmark_operation(name, df)`` → runs ``df`` to a no-op sink with a
+  ``spy`` attached and returns a :class:`BenchmarkRun` (the benchmark.proto
+  vocabulary: wall time, rows processed, rows/s).
 
-Both are plan-level: no extra pass over the data, unlike a cache+count
-probe.
+The row count is plan-level: no extra pass over the data, unlike a
+cache+count probe.
 """
 
 from __future__ import annotations

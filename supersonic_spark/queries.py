@@ -41,13 +41,26 @@ from supersonic_spark.operators.sort import SortKey
 from supersonic_spark.pipeline import dedup, multimodal, similarity, textstats
 from supersonic_spark.session import load_tables
 
-QuerySpec = tuple[Callable[[SparkSession, str], DataFrame], "str | None"]
+Build = Callable[[SparkSession, str], DataFrame]
+Check = Callable[[SparkSession, str, DataFrame], DataFrame]
+QuerySpec = tuple[Build, "str | None"]
+#: name -> (verified build, DuckDB oracle SQL)
 REGISTRY: dict[str, QuerySpec] = {}
+#: name -> the operator plan a user runs (what the benchmarks time)
+OPERATORS: dict[str, Build] = {}
 
 
-def q(name: str, oracle: str | None = None):
+def q(name: str, oracle: str | None = None, check: Check | None = None):
+    """Register ``fn`` as the operator plan for ``name``.  Without a
+    ``check`` the operator's output IS the oracle-verified result; with
+    one, ``check(spark, sf_dir, fn(spark, sf_dir))`` wraps the operator's
+    output into the oracle's shape (exact ground truth + invariant
+    booleans), so the bench and the oracle run the same operator."""
+
     def deco(fn):
-        REGISTRY[name] = (fn, oracle)
+        OPERATORS[name] = fn
+        build = fn if check is None else (lambda spark, d: check(spark, d, fn(spark, d)))
+        REGISTRY[name] = (build, oracle)
         return fn
 
     return deco

@@ -15,7 +15,6 @@ from supersonic_spark.streaming.ops import (
     sessionize,
     stream_changed,
     stream_dedup,
-    stream_running_agg_tws,
     stream_running_min_with_flush,
     stream_running_sum,
     stream_smudge,
@@ -31,7 +30,6 @@ __all__ = [
     "sessionize",
     "stream_changed",
     "stream_dedup",
-    "stream_running_agg_tws",
     "stream_running_min_with_flush",
     "stream_running_sum",
     "stream_smudge",

@@ -962,83 +962,6 @@ def stream_locf_running_min(
     )
 
 
-def stream_running_agg_tws(
-    df: DataFrame,
-    key_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Per-key running (count, sum) on the transformWithState API (Spark
-    4's arbitrary-state processor: typed state handles, timers, TTL) —
-    the successor surface to applyInPandasWithState and the template for
-    porting the reference's stateful expressions
-    (stateful_expressions.h:30-69) onto production state stores.
-
-    Emits one (key, n, total) row per key per micro-batch — the running
-    totals across all batches so far.  State is a single ValueState row
-    per key (RocksDB-backed on a real cluster), so state size ∝ keys, not
-    history.
-
-    ENVIRONMENT-GATED like the media codecs: TWS's state-server protocol
-    needs the ``protobuf`` package, which this container lacks — the
-    operator raises a clear error here and runs unchanged where protobuf
-    exists.  applyInPandasWithState (stream_running_sum et al.) is the
-    dependency-free path with the same semantics."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(absent in this container); use stream_running_sum "
-            "(applyInPandasWithState) for the same semantics here"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType(), True),
-            T.StructField("n", T.LongType(), False),
-            T.StructField("total", T.DoubleType(), False),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType(), False),
-            T.StructField("total", T.DoubleType(), False),
-        ]
-    )
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("acc", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                vals = pdf[value_col].dropna()
-                n += len(pdf)
-                total += float(vals.sum())
-            self._state.update((n, total))
-            yield pd.DataFrame({"key": [str(key[0])], "n": [n], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    # TWS resolves grouping columns by NAME — materialize the cast first
-    keyed = df.withColumn("__key", F.col(key_col).cast("string"))
-    return (
-        keyed.groupBy("__key")
-        .transformWithStateInPandas(
-            RunningAgg(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def stream_upsert_latest(
     df: DataFrame,
     keys: list[str],

@@ -274,11 +274,17 @@ def test_q18_big_order_broadcast_builds_once(spark, qs):
     so the assertion surface is the FINAL plan after one execution."""
     df = qs["tpch_q18_shape"](spark, SF_DIR)
     df.collect()
-    plan = _plan(df)
-    assert "ReusedExchange" in plan, (
+    tree = _plan(df).split("\n\n")[0]
+    final = tree.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    # every broadcast join has a build side; exactly one of them is the
+    # reused big-order set instead of a BroadcastExchange of its own
+    n_joins = final.count("BroadcastHashJoin")
+    assert n_joins >= 2, final
+    assert final.count("BroadcastExchange") == n_joins - 1, (
         "big-order broadcast build no longer reused - the second "
-        "BroadcastExchange subtree stopped canonicalizing equal"
+        "BroadcastExchange subtree stopped canonicalizing equal\n" + final
     )
+    assert final.count("ReusedExchange") == 1, final
 
 
 def test_plan_to_dot(spark, tables):

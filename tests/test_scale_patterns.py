@@ -391,49 +391,6 @@ def test_events_stream_multifile_dataset_dir(spark, sf_dir, tables, tmp_path):
 
 
 # ---------------------------------------------------------------------
-# transformWithState running aggregate == batch groupBy at drain
-# ---------------------------------------------------------------------
-
-
-def test_stream_running_agg_tws_batch_equal(spark, sf_dir, tables):
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState needs protobuf (absent here)"
-    )
-    from supersonic_spark.streaming.ops import events_stream, stream_running_agg_tws
-
-    stream = events_stream(spark, sf_dir).select("event_type", "value")
-    agged = stream_running_agg_tws(stream, "event_type", "value")
-    sink = "t_tws_running_agg"
-    (
-        agged.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(120)
-    )
-    # update mode: keep the LAST emitted row per key (running totals)
-    got = (
-        spark.table(sink)
-        .groupBy("key")
-        .agg(F.max(F.struct("n", "total")).alias("s"))
-        .select("key", "s.n", "s.total")
-    )
-    want = tables["events"].groupBy(
-        F.col("event_type").alias("key")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("value").alias("total"),
-    )
-    g = {r["key"]: (r["n"], round(r["total"], 6)) for r in got.collect()}
-    w = {r["key"]: (r["n"], round(r["total"], 6)) for r in want.collect()}
-    assert set(g) == set(w)
-    for k in w:
-        assert g[k][0] == w[k][0], (k, g[k], w[k])
-        assert abs(g[k][1] - w[k][1]) < 1e-6 * max(1.0, abs(w[k][1]))
-
-
-# ---------------------------------------------------------------------
 # stream-stream LEFT OUTER interval join: every emitted row is sound
 # ---------------------------------------------------------------------
 

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Per-query job/stage profile: run a headline query (registry + bench
-overrides) with the UI enabled and print, for the STEADY-state execution,
+"""Per-query job/stage profile: run a headline query's operator plan (the
+one bench.py times) with the UI enabled and print, for the STEADY-state execution,
 every Spark job and stage with wall time, task count, and shuffle bytes.
 
     python tools/profile_query.py similarity_ivfpq_ann [more ...]
@@ -96,12 +96,11 @@ def main() -> None:
 
     from supersonic_spark.session import get_spark
 
-    import bench
-    from __spark_entry__ import queries
+    from __spark_entry__ import operators
 
     spark = get_spark("profile_query", ui=True)
     spark.sparkContext.setLogLevel("ERROR")
-    qs = dict(queries(), **bench._operator_overrides())
+    qs = operators()
     for name in sys.argv[1:]:
         profile(spark, qs, name, sf_dir)
 
