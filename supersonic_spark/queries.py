@@ -18,6 +18,9 @@ Determinism rules used throughout (so value-hash comparison is exact):
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +71,16 @@ def q(name: str, oracle: str | None = None, check: Check | None = None):
 
 def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return load_tables(spark, sf_dir)
+
+
+def _scratch(prefix: str, sf_dir: str) -> str:
+    """An emptied scratch directory for ``sf_dir``'s run of a query that
+    persists an artifact (index, stream source, sink):
+    ``<tmp>/<prefix><sf_dir with "/" as "_">``."""
+    tag = sf_dir.rstrip("/").replace("/", "_")
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}{tag}")
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def _dec(col, p=12, s=2):

@@ -18,7 +18,7 @@ from supersonic_spark.operators import sort as sort_ops
 from supersonic_spark.operators.aggregate import AggSpec, Aggregation
 from supersonic_spark.operators.sort import SortKey
 from supersonic_spark.pipeline import textstats
-from supersonic_spark.queries import _dec, _t, q
+from supersonic_spark.queries import _dec, _scratch, _t, q
 
 
 @q(
@@ -449,21 +449,14 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
     drained streaming sketch must equal cms_build over the full batch
     table ROW-FOR-ROW (CMS merge is exact), and estimates for the exact
     top-10 users never underestimate."""
-    import os
-    import shutil
-    import tempfile
-
     from supersonic_spark.streaming.ops import stream_cms_build
 
     depth, width = 4, 256
     t = _t(spark, sf_dir)
     ev = t["events"]
     keys = ev.select("user_id")
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    src = os.path.join(tempfile.gettempdir(), f"ss_stream_cms_src{tag}")
-    sketch_path = os.path.join(tempfile.gettempdir(), f"ss_stream_cms{tag}")
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(sketch_path, ignore_errors=True)
+    src = _scratch("ss_stream_cms_src", sf_dir)
+    sketch_path = _scratch("ss_stream_cms", sf_dir)
     keys.coalesce(2).write.mode("overwrite").parquet(src)
     stream = (
         spark.readStream.schema("user_id long")

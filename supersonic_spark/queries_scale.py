@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from supersonic_spark.operators import aggregate as agg
 from supersonic_spark.operators import analytics, core, join as join_ops
 from supersonic_spark.operators.aggregate import AggSpec, Aggregation
-from supersonic_spark.queries import _dec, _t, q
+from supersonic_spark.queries import _dec, _scratch, _t, q
 from supersonic_spark.session import load_tables
 from supersonic_spark.sources import io as ss_io
 
@@ -599,16 +599,16 @@ def q_expr_array_hof(spark, sf_dir):
     )
 
 
-@q(
-    "serde_expression_eval",
-    """SELECT l_orderkey, l_linenumber,
+_SERDE_ORACLE = """SELECT l_orderkey, l_linenumber,
               l_extendedprice * (1 - l_discount) AS revenue,
               CASE l_returnflag WHEN 'R' THEN 'returned'
                                 WHEN 'A' THEN 'accepted'
                                 ELSE 'neither' END AS flag_word
        FROM lineitem
-       WHERE l_quantity > 45 AND l_discount <= 0.05""",
-)
+       WHERE l_quantity > 45 AND l_discount <= 0.05"""
+
+
+@q("serde_expression_eval", _SERDE_ORACLE)
 def q_serde_expression_eval(spark, sf_dir):
     """Serialized expression trees end-to-end (SURVEY.md §2.8/§3.3 — the
     reference's BuildExpressionFromProto is its only query language):
@@ -647,16 +647,7 @@ def q_serde_expression_eval(spark, sf_dir):
     return core.compute(filtered, computed)
 
 
-@q(
-    "serde_expression_textproto",
-    """SELECT l_orderkey, l_linenumber,
-              l_extendedprice * (1 - l_discount) AS revenue,
-              CASE l_returnflag WHEN 'R' THEN 'returned'
-                                WHEN 'A' THEN 'accepted'
-                                ELSE 'neither' END AS flag_word
-       FROM lineitem
-       WHERE l_quantity > 45 AND l_discount <= 0.05""",
-)
+@q("serde_expression_textproto", _SERDE_ORACLE)
 def q_serde_expression_textproto(spark, sf_dir):
     """Wire-format parity for §2.8: the SAME query as serde_expression_eval,
     but every expression arrives as a protobuf TEXT-FORMAT
@@ -1046,8 +1037,7 @@ def q_partitioned_write_prune(spark, sf_dir):
     from supersonic_spark.sources import io as ss_io
 
     tables = load_tables(spark, sf_dir)
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    dst = os.path.join(tempfile.gettempdir(), f"ss_part_events{tag}")
+    dst = _scratch("ss_part_events", sf_dir)
     # always rewrite: a cached copy could silently go stale if the
     # source tables are regenerated while /tmp persists
     ss_io.file_output(
@@ -1151,14 +1141,10 @@ def q_streaming_foreachbatch_sink(spark, sf_dir):
     production sink recipe when the target lacks transactions); the
     returned DataFrame re-reads what was SUNK, so the oracle checks the
     full write-read cycle, not just the in-flight stream."""
-    import shutil
-
     from supersonic_spark.streaming.ops import events_stream
 
     load_tables(spark, sf_dir)
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    out_dir = os.path.join(tempfile.gettempdir(), f"ss_foreachbatch_sink{tag}")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = _scratch("ss_foreachbatch_sink", sf_dir)
 
     def write_batch(df, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
@@ -1194,17 +1180,13 @@ def q_streaming_multibatch_window_agg(spark, sf_dir):
     it in 4 micro-batches — the windowed state MERGES partial counts/sums
     across batches (the thing single-batch drains never exercise) and the
     final complete-mode result still hash-matches the batch SQL."""
-    import shutil
-
     from supersonic_spark.operators.aggregate import AggSpec, Aggregation
     from supersonic_spark.streaming.ops import windowed_aggregate
 
     tables = load_tables(spark, sf_dir)
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    src = os.path.join(tempfile.gettempdir(), f"ss_multibatch_src{tag}")
     # always rewrite (stale-cache guard: source tables can be regenerated
     # between rounds while /tmp persists)
-    shutil.rmtree(src, ignore_errors=True)
+    src = _scratch("ss_multibatch_src", sf_dir)
     tables["events"].repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = (
@@ -1258,14 +1240,10 @@ def q_streaming_dedup_events(spark, sf_dir):
     State expires with the watermark, so the dedup runs forever on
     unbounded streams — the exactly-once ingestion front door at
     100 TB/day."""
-    import shutil
-
     from supersonic_spark.streaming.ops import stream_dedup
 
     tables = load_tables(spark, sf_dir)
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    src = os.path.join(tempfile.gettempdir(), f"ss_dedup_src{tag}")
-    shutil.rmtree(src, ignore_errors=True)
+    src = _scratch("ss_dedup_src", sf_dir)
     ev = tables["events"].withColumn("ts", F.col("ts").cast("timestamp")).select(
         "event_id", "user_id", "event_type", "ts"
     ).filter(F.col("event_type").isin("signup", "purchase"))
@@ -1309,17 +1287,12 @@ def q_streaming_incremental_matview(spark, sf_dir):
     rollup-table maintenance loop).  State alternates between two paths
     (read-path ≠ write-path, since a Spark job cannot overwrite its own
     input); the final table hash-matches the one-shot batch aggregate."""
-    import shutil
-
     from supersonic_spark.operators.aggregate import incremental_group_aggregate
 
     tables = load_tables(spark, sf_dir)
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    src = os.path.join(tempfile.gettempdir(), f"ss_matview_src{tag}")
-    shutil.rmtree(src, ignore_errors=True)
+    src = _scratch("ss_matview_src", sf_dir)
     tables["events"].repartition(4).write.mode("overwrite").parquet(src)
-    state_root = os.path.join(tempfile.gettempdir(), f"ss_matview_state{tag}")
-    shutil.rmtree(state_root, ignore_errors=True)
+    state_root = _scratch("ss_matview_state", sf_dir)
     os.makedirs(state_root)
 
     # state stays DECIMAL across merges (double accumulation would drift

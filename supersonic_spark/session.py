@@ -64,6 +64,22 @@ def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory (MemTotal in /proc/meminfo), capped at 48g.
+
+    local[32] runs all 32 tasks in this one JVM: 16g thrashes GC once the
+    session accumulates state (observed 5-10× stage slowdowns), so a big
+    host sizes the heap like the 32-core executor it actually is; a small
+    one must not promise the JVM more heap than the machine has.  48g when
+    MemTotal cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{min(48 * 1024, kb // 2048)}m"
+
+
 def get_spark(app_name: str = "supersonic_spark", shuffle_partitions: int | None = None,
               ui: bool | None = None) -> SparkSession:
     """Build (or get) a local session sized for local[$SPARK_GRAFT_CPUS].
@@ -84,10 +100,8 @@ def get_spark(app_name: str = "supersonic_spark", shuffle_partitions: int | None
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(sp))
-        # local[32] runs all 32 tasks in this one JVM: 16g thrashes GC once
-        # the session accumulates state (observed 5-10× stage slowdowns);
-        # size the heap like the 32-core executor it actually is.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # 16 MB, not Spark's 10 MB default scaled up: dimension tables are
         # ≤2 MB at every SF so they always broadcast, but a FACT-DERIVED

@@ -777,6 +777,45 @@ def test_ivf_index_build_probe(spark, tables, tmp_path):
     assert "dynamicpruning" in plan.lower()
 
 
+def test_ivf_corpus_index_builds_once_under_concurrent_queries(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """The catalog's shared corpus IVF index is built once per session
+    even when the queries that read it start from many threads at once
+    (the build is replaced by a slow fake that only counts calls)."""
+    import sys
+    import threading
+    import time
+
+    import supersonic_spark.queries_pipeline as qp
+
+    builds, paths = [], []
+
+    def fake_build(*args, **kwargs):
+        builds.append(1)
+        time.sleep(0.05)
+
+    monkeypatch.setattr(qp, "_IVF_CORPUS_INDEXES", {})
+    monkeypatch.setattr(qp, "_scratch", lambda prefix, _: str(tmp_path / prefix))
+    monkeypatch.setattr(qp.similarity, "ivf_index_build", fake_build)
+    workers = [
+        threading.Thread(target=lambda: paths.append(qp._ivf_corpus_index(spark, sf_dir)))
+        for _ in range(16)
+    ]
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(60)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(w.is_alive() for w in workers)
+    assert len(builds) == 1
+    assert paths == [str(tmp_path / "ss_ivf_index")] * 16
+
+
 def test_mmr_rerank_diversifies(spark):
     """MMR: rank 1 is the exact cosine top-1; a near-copy of the top hit
     cannot take slot 2 even though it out-scores every other candidate on

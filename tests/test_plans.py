@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from __spark_entry__ import queries
+from __spark_entry__ import operators, queries
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -374,3 +374,22 @@ def test_job_group_interrupt_cancels_running_query(spark):
     assert "cancel" in str(err[0]).lower() or "SparkException" in type(err[0]).__name__
     # the whole round-trip beat running 2^36 sha256 rows to EOS
     assert _time.perf_counter() - t0 < 60
+
+
+def test_timed_operators_rebuild_no_index_and_run_no_check(spark):
+    """What bench.py times is the operator: a second run of the IVF probe
+    in one session probes the session's corpus index without rewriting
+    it, and the semdedup plan carries no cross-joined check aggregates."""
+    import os
+
+    from supersonic_spark.queries_pipeline import _ivf_corpus_index
+
+    ops = operators()
+    ops["similarity_ivf_index_probe"](spark, SF_DIR).collect()
+    sidecar = os.path.join(_ivf_corpus_index(spark, SF_DIR), "_ivf_centroids.json")
+    built = os.stat(sidecar).st_mtime_ns
+    ops["similarity_ivf_index_probe"](spark, SF_DIR).collect()
+    assert os.stat(sidecar).st_mtime_ns == built
+
+    plan = _plan(ops["dedup_semantic_semdedup"](spark, SF_DIR))
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan

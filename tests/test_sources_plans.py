@@ -725,7 +725,7 @@ def test_operators_cover_catalog_and_bench():
     assert checked == {
         "dedup_minhash_lsh", "dedup_minhash_estimate", "dedup_simhash",
         "dedup_incremental_minhash", "similarity_lsh_ann", "similarity_ivf_ann",
-        "similarity_pq_ann", "similarity_ivfpq_ann",
+        "similarity_pq_ann", "similarity_ivfpq_ann", "dedup_semantic_semdedup",
     }
 
 

@@ -62,10 +62,10 @@ NOTES = {
         "SemDeDup: centroids train driver-side on a bounded sample; "
         "cell assignment is one Arrow-batched matmul; the only "
         "corpus-wide shuffle keys on the cell id, and the quadratic "
-        "cosine scan runs strictly within cells.  Its oracle check "
-        "needs planted copies in the INPUT, so this verified definition "
-        "(500 vectors + 20 copies + the O(n²) exact-cosine ground truth) "
-        "is also what bench times."
+        "cosine scan runs strictly within cells.  The input is the full "
+        "table plus 20 planted copies; the oracle check (exact-cosine "
+        "ground truth on a 520-row slice) wraps this plan and is not in "
+        "it."
     ),
     "bloom_prefilter_join_supplier": (
         "The Bloom bit-test (element_at over a literal word array + "

@@ -51,8 +51,7 @@ QUERIES = [
     "dedup_minhash_lsh",
     "dedup_simhash",
     "dedup_incremental_minhash",
-    # dedup_semantic_semdedup is left out: its one definition is the
-    # verified body over a fixed 500-row slice, which has no scaling curve
+    "dedup_semantic_semdedup",
     "similarity_lsh_ann",
     "similarity_ivf_ann",
     "similarity_pq_ann",

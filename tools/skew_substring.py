@@ -83,16 +83,16 @@ def main() -> None:
         build_corpus(spark, path, n_docs, hot_fraction)
     docs = spark.read.parquet(path)
 
-    # warm run (codegen), then the measured run
-    dedup.substring_dup_spans(docs, "doc_id", "text").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    # warm run (codegen) and the row count, then the measured run: only
+    # the measured run's stages come after the mark
+    warm = dedup.substring_dup_spans(docs, "doc_id", "text")
+    warm.write.format("noop").mode("overwrite").save()
+    n_rows = warm.count()
     mark = _max_stage_id(spark)
     t0 = time.perf_counter()
     out = dedup.substring_dup_spans(docs, "doc_id", "text")
     out.write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    n_rows = out.count()
 
     # per-task summary of every stage in the measured run; the window
     # stage is the one with the largest max task
@@ -107,7 +107,7 @@ def main() -> None:
                 f"/stages/{sid}/{st['attemptId']}/taskSummary"
                 "?quantiles=0.5,1.0",
             )
-        except Exception:
+        except (OSError, ValueError):  # HTTP/URL errors, bad JSON
             continue
         med, mx = summ["executorRunTime"]
         rows.append((sid, st["numCompleteTasks"], med / 1000.0, mx / 1000.0))
@@ -118,6 +118,9 @@ def main() -> None:
         print(f"  stage {sid}: {nt} tasks, med {med:.2f}s, max {mx:.2f}s, "
               f"max/med {ratio:.1f}x")
 
+    if not rows:
+        sys.exit(f"no task summary for any stage after {mark} came back from "
+                 f"the UI REST API; SKEW.md not updated")
     sid, nt, med, mx = rows[0]
     ratio = mx / med if med > 0 else float("inf")
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
