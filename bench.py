@@ -101,8 +101,7 @@ def _optimize_layout(spark, sf_dir: str, big_files: int = 8) -> tuple[str, float
     files (≈75k rows/task at sf0.1 — measured sweet spot; 32 files adds
     more stage overhead than it removes), small dimensions as 1.  Ingest
     is timed and reported separately, like any load-then-query benchmark;
-    queries measure pure execution.  Disable with
-    SPARK_GRAFT_BENCH_INGEST=0 to scan the driver layout directly.
+    queries measure pure execution.
 
     The classic fact tables (lineitem/orders/events) always get
     ``big_files``; every OTHER table's file count derives from its
@@ -211,9 +210,7 @@ def main() -> None:
     # time the check instead of the operator a user runs
     qs = operators()
 
-    ingest_sec = None
-    if os.environ.get("SPARK_GRAFT_BENCH_INGEST", "1") != "0":
-        sf_dir, ingest_sec = _optimize_layout(spark, sf_dir)
+    sf_dir, ingest_sec = _optimize_layout(spark, sf_dir)
 
     # warm the JVM + file listing once (excluded from timing)
     qs["tpch_q1"](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -269,35 +266,31 @@ def main() -> None:
     # rows/sec collapse — the batch side has this via the BENCH_r* history,
     # the streaming side only had the periodic STREAMING.md sweep.  Floors
     # are calibrated to the sf0.1 drain, so the gate only arms there;
-    # other SFs still report the measurement.  SPARK_GRAFT_BENCH_STREAMING=0
-    # skips the probe entirely.
-    streaming_rps: dict[str, float] | None = None
-    streaming_gate = "skipped"
-    if os.environ.get("SPARK_GRAFT_BENCH_STREAMING", "1") != "0":
-        from supersonic_spark.streaming.gate import (
-            check_streaming_gate,
-            measure_streaming_throughput,
-        )
+    # other SFs still report the measurement.
+    from supersonic_spark.streaming.gate import (
+        check_streaming_gate,
+        measure_streaming_throughput,
+    )
 
-        # best-of-2 timed drains per operator (after the warm drain): the
-        # Python-state lane's wall time is jitter-amplified (see
-        # streaming/gate.py round-9 recalibration) — one co-tenant burst
-        # must not fail the gate alone
-        streaming_rps = {
-            k: round(v)
-            for k, v in measure_streaming_throughput(
-                spark, orig_sf_dir, runs=2
-            ).items()
-        }
-        if sf == "0.1":
-            violations = check_streaming_gate(streaming_rps)
-            streaming_gate = "pass" if not violations else "FAIL: " + "; ".join(
-                violations
-            )
-            for v in violations:
-                print(f"STREAMING GATE FAIL: {v}", file=sys.stderr)
-        else:
-            streaming_gate = "unarmed (floors calibrated at sf0.1)"
+    # best-of-2 timed drains per operator (after the warm drain): the
+    # Python-state lane's wall time is jitter-amplified (see
+    # streaming/gate.py round-9 recalibration) — one co-tenant burst
+    # must not fail the gate alone
+    streaming_rps = {
+        k: round(v)
+        for k, v in measure_streaming_throughput(
+            spark, orig_sf_dir, runs=2
+        ).items()
+    }
+    if sf == "0.1":
+        violations = check_streaming_gate(streaming_rps)
+        streaming_gate = "pass" if not violations else "FAIL: " + "; ".join(
+            violations
+        )
+        for v in violations:
+            print(f"STREAMING GATE FAIL: {v}", file=sys.stderr)
+    else:
+        streaming_gate = "unarmed (floors calibrated at sf0.1)"
 
     lean = {
         "metric": "headline_queries_total_wall",

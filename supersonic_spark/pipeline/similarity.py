@@ -160,32 +160,6 @@ def _hyperplane_weight(table: int, plane: int, dim: int) -> float:
     return (v % 2_000_003) / 1_000_001.0 - 1.0
 
 
-def _bucket_sketch(vec, table: int, planes: int, dim: int) -> Column:
-    """LSH bucket id: sign bits of `planes` random projections packed into a
-    long.  Hyperplanes are literal double arrays (precomputed driver-side —
-    keeps the expression tree small and the per-row work a pure
-    multiply-add fold, JVM-side)."""
-    bits = []
-    for p in range(planes):
-        weights = F.array(
-            *[F.lit(_hyperplane_weight(table, p, d)) for d in range(dim)]
-        )
-        proj = F.aggregate(
-            F.zip_with(_c(vec), weights, lambda x, w: x.cast("double") * w),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(
-            F.when(proj >= 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = F.lit(0).cast("long")
-    for b in bits:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def _bucket_sketch_udf(dim: int, planes: int, tables: int):
     """Vectorized (Arrow-batched) bucket sketch: one numpy matmul per batch
     computes all `tables` bucket ids → array<long>.  This is the sanctioned

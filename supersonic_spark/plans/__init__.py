@@ -5,8 +5,8 @@ trees, §4.2 benchmark wiretaps).
   operator-layer functions and apply it lazily (CreateCursor ≈ the
   DataFrame; operation.h:35-82).
 - ``instrument`` — Spy/SpyPrinter (spy.h:41-77) and the benchmark wiretap
-  vocabulary (benchmark/proto/benchmark.proto:11-75) via df.observe +
-  QueryExecutionListener.
+  vocabulary (benchmark/proto/benchmark.proto:11-75) via df.observe, and
+  per-job/stage profiles of a job group from the core status store.
 """
 
 from supersonic_spark.plans.dot import plan_to_dot

@@ -9,7 +9,12 @@ timing per Next() call.  Spark's native equivalents:
   aggregate expression);
 - ``benchmark_operation(name, df)`` → runs ``df`` to a no-op sink with a
   ``spy`` attached and returns a :class:`BenchmarkRun` (the benchmark.proto
-  vocabulary: wall time, rows processed, rows/s).
+  vocabulary: wall time, rows processed, rows/s);
+- ``job_profile(spark, group)`` → every job of one :func:`job_group`
+  (a ``benchmark_operation``'s is ``BenchmarkRun.group``) with its stages'
+  task counts, bytes, executor times and median/max task time, read from
+  the session's core status store with the UI off — the per-cursor stats
+  of benchmark.proto, at Spark's job/stage grain.
 
 The row count is plan-level: no extra pass over the data, unlike a
 cache+count probe.
@@ -19,7 +24,7 @@ from __future__ import annotations
 
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -106,6 +111,7 @@ class BenchmarkRun:
     name: str
     wall_sec: float
     rows: int
+    group: str
 
     @property
     def rows_per_sec(self) -> float:
@@ -118,8 +124,104 @@ def benchmark_operation(name: str, df: DataFrame) -> BenchmarkRun:
     :func:`job_group` (``bench:<name>``) so a hung measurement is
     cancellable from another thread via :func:`interrupt`."""
     wired, obs = spy(df)
-    with job_group(df.sparkSession, f"bench:{name}", f"benchmark_operation {name}"):
+    group = f"bench:{name}"
+    with job_group(df.sparkSession, group, f"benchmark_operation {name}"):
         t0 = time.perf_counter()
         wired.write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
-    return BenchmarkRun(name=name, wall_sec=wall, rows=int(obs.get["rows_processed"]))
+    return BenchmarkRun(name=name, wall_sec=wall, rows=int(obs.get["rows_processed"]),
+                        group=group)
+
+
+@dataclass
+class StageProfile:
+    """One stage's last attempt.  Times are seconds, ``*_ms`` epoch ms;
+    the task quantiles are None for a stage that ran no task."""
+
+    stage_id: int
+    status: str
+    name: str
+    num_tasks: int
+    num_complete_tasks: int
+    input_bytes: int
+    shuffle_read_bytes: int
+    shuffle_write_bytes: int
+    spill_bytes: int
+    peak_execution_memory: int
+    run_s: float
+    cpu_s: float
+    gc_s: float
+    launched_ms: int | None
+    completed_ms: int | None
+    task_median_s: float | None
+    task_max_s: float | None
+
+
+@dataclass
+class JobProfile:
+    """One job of a group; ``*_ms`` are epoch ms."""
+
+    job_id: int
+    description: str
+    submitted_ms: int | None
+    completed_ms: int | None
+    stages: list[StageProfile]
+
+
+def _ms(opt) -> int | None:
+    """Epoch ms of a Scala ``Option[Date]``."""
+    return opt.get().getTime() if opt.isDefined() else None
+
+
+def _stage(store, sid: int, quantiles) -> StageProfile | None:
+    try:
+        st = store.lastStageAttempt(sid)
+    except Exception:  # py4j: a stage that never ran has no attempt
+        return None
+    med = mx = None
+    if st.numCompleteTasks() > 0:
+        summary = store.taskSummary(sid, st.attemptId(), quantiles)
+        if summary.isDefined():
+            rt = summary.get().executorRunTime()
+            med, mx = rt.apply(0) / 1e3, rt.apply(1) / 1e3
+    return StageProfile(
+        stage_id=sid, status=st.status().toString(), name=st.name(),
+        num_tasks=st.numTasks(), num_complete_tasks=st.numCompleteTasks(),
+        input_bytes=st.inputBytes(), shuffle_read_bytes=st.shuffleReadBytes(),
+        shuffle_write_bytes=st.shuffleWriteBytes(), spill_bytes=st.diskBytesSpilled(),
+        peak_execution_memory=st.peakExecutionMemory(), run_s=st.executorRunTime() / 1e3,
+        cpu_s=st.executorCpuTime() / 1e9, gc_s=st.jvmGcTime() / 1e3,
+        launched_ms=_ms(st.firstTaskLaunchedTime()), completed_ms=_ms(st.completionTime()),
+        task_median_s=med, task_max_s=mx,
+    )
+
+
+def job_profile(spark: SparkSession, group: str) -> list[JobProfile]:
+    """Every job of job group ``group``, in job-id order, with its stages
+    in stage-id order — read from the core status store
+    (``statusStore()``), which Spark keeps with the UI off.
+
+    Settles the listener bus first, so a call right after the group's
+    last action sees all of it.  Only the group's jobs are listed: an
+    action outside the group (a ``.count()`` before or after it) is not.
+    Give each measured run a group id of its own — a reused id collects
+    every run under it."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    quantiles = sc._gateway.new_array(sc._gateway.jvm.double, 2)
+    quantiles[0], quantiles[1] = 0.5, 1.0
+    jobs = []
+    for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        job = store.job(jid)
+        it, stages = job.stageIds().iterator(), []
+        while it.hasNext():
+            stages.append(_stage(store, it.next(), quantiles))
+        desc = job.description()
+        jobs.append(JobProfile(
+            job_id=jid, description=desc.get() if desc.isDefined() else "",
+            submitted_ms=_ms(job.submissionTime()), completed_ms=_ms(job.completionTime()),
+            stages=sorted(filter(None, stages), key=lambda st: st.stage_id),
+        ))
+    return jobs

@@ -80,21 +80,18 @@ def _default_driver_mem() -> str:
     return f"{min(48 * 1024, kb // 2048)}m"
 
 
-def get_spark(app_name: str = "supersonic_spark", shuffle_partitions: int | None = None,
-              ui: bool | None = None) -> SparkSession:
+def get_spark(app_name: str = "supersonic_spark",
+              shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or get) a local session sized for local[$SPARK_GRAFT_CPUS].
 
     On a real cluster the same code runs unchanged; only master/partition
     counts differ (set spark.sql.shuffle.partitions ≈ 2-3× total cores there).
 
-    ``ui`` (default off, or $SPARK_GRAFT_UI=1): the UI's REST endpoint is
-    how tools/skew_sweep.py reads per-stage MAX TASK time — the straggler
-    metric local[32] wall-clock hides.  Off by default: the listener-bus
-    bookkeeping measurably taxes short benchmark stages.
+    The UI is off: its listener-bus bookkeeping measurably taxes short
+    benchmark stages, and per-job/stage/task metrics come from the core
+    status store instead (``plans.instrument.job_profile``).
     """
     cpus = _default_parallelism()
-    if ui is None:
-        ui = os.environ.get("SPARK_GRAFT_UI") == "1"
     sp = shuffle_partitions if shuffle_partitions is not None else max(cpus, 8)
     builder = (
         SparkSession.builder.appName(app_name)
@@ -113,7 +110,7 @@ def get_spark(app_name: str = "supersonic_spark", shuffle_partitions: int | None
         # the data).  sf0.1 times are unchanged.  At cluster scale the
         # same rule holds: broadcast dims, shuffle facts.
         .config("spark.sql.autoBroadcastJoinThreshold", str(16 * 1024 * 1024))
-        .config("spark.ui.enabled", "true" if ui else "false")
+        .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

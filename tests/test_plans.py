@@ -329,6 +329,32 @@ def test_job_group_nesting_restores_outer_group(spark):
     assert sc.getLocalProperty("spark.jobGroup.id") is None
 
 
+def test_job_profile_reads_only_the_groups_jobs(spark):
+    """job_profile lists exactly the jobs of one benchmark_operation's
+    group — an action outside it does not leak in — with stage bytes
+    and task quantiles read from the status store while the UI is off."""
+    from supersonic_spark.plans.instrument import benchmark_operation, job_profile
+
+    assert spark.conf.get("spark.ui.enabled") == "false"
+    tracker = spark.sparkContext.statusTracker()
+    spark.range(1000).count()
+    before = set(tracker.getJobIdsForGroup(None))
+    run = benchmark_operation(
+        "job-profile-test",
+        spark.range(0, 20000, 1, 4).groupBy((F.col("id") % 13).alias("k")).count(),
+    )
+    jobs = job_profile(spark, run.group)
+    assert jobs and [j.job_id for j in jobs] == sorted(tracker.getJobIdsForGroup(run.group))
+    assert not before & {j.job_id for j in jobs}
+    assert all("job-profile-test" in j.description for j in jobs)
+    done = [st for j in jobs for st in j.stages if st.status == "COMPLETE"]
+    writes = [st.stage_id for st in done if st.shuffle_write_bytes > 0]
+    assert writes and any(st.shuffle_read_bytes > 0 and st.stage_id > writes[0]
+                          for st in done)
+    ran = [st for j in jobs for st in j.stages if st.num_complete_tasks > 0]
+    assert ran and all(st.task_max_s >= st.task_median_s for st in ran)
+
+
 def test_job_group_interrupt_cancels_running_query(spark):
     """Cursor::Interrupt (cursor/base/cursor.h:150-186): a long-running
     query started inside a job_group is cancellable from ANOTHER thread;

@@ -13,7 +13,9 @@ BENCH_DETAIL.json therefore records per-query steady samples and
    untrustworthy; rerun bench.py exclusively before reading the ratio.
 2. ratio > 1 + max(0.15, spread_old + spread_new) ⇒ REGRESSED — the
    change exceeds what the recorded jitter can explain; root-cause it
-   (plan diff via PLANS.md first).
+   (plan diff via PLANS.md first).  An old cell with no recorded spread
+   takes the new run's spread on both sides (unknown is not zero; zero
+   reads host drift as REGRESSED) and prints ``spr_o`` as ``—``.
 3. ratio < 1 / 1.15 ⇒ IMPROVED.
 4. otherwise ⇒ ok (within noise).
 
@@ -56,9 +58,11 @@ def main() -> int:
     common = [q for q in new_q if q in old_q]
     regressed = []
     rows = []
+    unrecorded = [q for q in common if q not in old_s]
     for q in common:
         o, n = old_q[q], new_q[q]
-        so, sn = old_s.get(q, 0.0), new_s.get(q, 0.0)
+        sn = new_s.get(q, 0.0)
+        so = old_s.get(q, sn)
         ratio = n / o if o else float("inf")
         if max(so, sn) > SPREAD_NOISY:
             verdict = "NOISY"
@@ -75,15 +79,17 @@ def main() -> int:
     print(f"{'query':<{w}}  {'old':>7}  {'new':>7}  {'ratio':>6}  "
           f"{'spr_o':>5}  {'spr_n':>5}  verdict")
     for q, o, n, ratio, so, sn, verdict in rows:
+        spr_o = f"{so:5.2f}" if q in old_s else f"{'—':>5}"
         print(f"{q:<{w}}  {o:7.3f}  {n:7.3f}  {ratio:6.2f}  "
-              f"{so:5.2f}  {sn:5.2f}  {verdict}")
+              f"{spr_o}  {sn:5.2f}  {verdict}")
     if not common:
         print(f"no common queries between {old_path} and {new_path}")
         return 2
     tot_o = sum(old_q[q] for q in common)
     tot_n = sum(new_q[q] for q in common)
     print(f"\n{len(common)} common queries: {tot_o:.2f}s -> {tot_n:.2f}s "
-          f"({tot_n / tot_o:.2f}x); {len(regressed)} regressed")
+          f"({tot_n / tot_o:.2f}x); {len(regressed)} regressed; "
+          f"{len(unrecorded)} without a recorded old spread")
     if regressed:
         print("REGRESSED:", ", ".join(sorted(regressed)))
     return 1 if regressed else 0

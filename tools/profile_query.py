@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Per-query job/stage profile: run a headline query's operator plan (the
-one bench.py times) with the UI enabled and print, for the STEADY-state execution,
-every Spark job and stage with wall time, task count, and shuffle bytes.
+one bench.py times) and print, for the STEADY-state execution, every Spark
+job and stage with wall time, task count, and shuffle bytes, read from the
+core status store (``plans.instrument.job_profile``; the UI stays off).
 
     python tools/profile_query.py similarity_ivfpq_ann [more ...]
 
@@ -13,82 +14,56 @@ SPARK_GRAFT_SF_DIR overrides.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _rest(spark, path: str):
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}{path}") as r:
-        return json.load(r)
-
-
 def profile(spark, qs, name: str, sf_dir: str) -> None:
+    from supersonic_spark.plans.instrument import job_group, job_profile
     from supersonic_spark.session import release_two_pass_caches
 
-    sc = spark.sparkContext
     # warm run (JIT, Arrow workers, listing) — not profiled
-    sc.setJobDescription(f"warm:{name}")
     qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
     release_two_pass_caches()
 
-    jobs_before = {j["jobId"] for j in _rest(spark, "/jobs")}
-    sc.setJobDescription(f"steady:{name}")
-    t0 = time.perf_counter()
-    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
-    sc.setJobDescription(None)
+    group = f"profile:{name}:{uuid.uuid4().hex}"
+    with job_group(spark, group, f"steady:{name}"):
+        t0 = time.perf_counter()
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        wall = time.perf_counter() - t0
     release_two_pass_caches()
-
-    jobs = [j for j in _rest(spark, "/jobs") if j["jobId"] not in jobs_before]
-    jobs.sort(key=lambda j: j["jobId"])
-    stages = {s["stageId"]: s for s in _rest(spark, "/stages")}
-
-    def _ms(a, b) -> float:
-        from datetime import datetime
-
-        fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-        ta = datetime.strptime(a.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
-        tb = datetime.strptime(b.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
-        return (tb - ta).total_seconds() * 1000
+    jobs = job_profile(spark, group)
 
     print(f"\n=== {name}: steady wall {wall*1000:.0f} ms, {len(jobs)} jobs ===")
     total_job_ms = 0.0
     prev_end = None
     for j in jobs:
-        dur = _ms(j["submissionTime"], j["completionTime"])
+        dur = j.completed_ms - j.submitted_ms
         total_job_ms += dur
         gap = ""
-        if prev_end is not None:
-            g = _ms(prev_end, j["submissionTime"])
-            if g > 5:
-                gap = f"  (+{g:.0f} ms driver gap before)"
-        prev_end = j["completionTime"]
-        print(f"  job {j['jobId']:>4} {dur:7.0f} ms  {j.get('description','')[:60]}{gap}")
-        for sid in sorted(j["stageIds"]):
-            st = stages.get(sid)
-            if not st or st["status"] == "SKIPPED":
-                print(f"        stage {sid:>4} SKIPPED")
+        if prev_end is not None and j.submitted_ms - prev_end > 5:
+            gap = f"  (+{j.submitted_ms - prev_end} ms driver gap before)"
+        prev_end = j.completed_ms
+        print(f"  job {j.job_id:>4} {dur:7.0f} ms  {j.description[:60]}{gap}")
+        for st in j.stages:
+            if st.status == "SKIPPED":
+                print(f"        stage {st.stage_id:>4} SKIPPED")
                 continue
-            sdur = _ms(st["firstTaskLaunchedTime"], st["completionTime"]) if st.get(
-                "firstTaskLaunchedTime") else float("nan")
+            sdur = st.completed_ms - st.launched_ms if st.launched_ms else float("nan")
             print(
-                f"        stage {sid:>4} {sdur:6.0f} ms  tasks={st['numCompleteTasks']:<4}"
-                f" in={st['inputBytes']:>9} sh_r={st['shuffleReadBytes']:>9}"
-                f" sh_w={st['shuffleWriteBytes']:>9}  {st['name'].split(' at ')[0]}"
+                f"        stage {st.stage_id:>4} {sdur:6.0f} ms  tasks={st.num_complete_tasks:<4}"
+                f" in={st.input_bytes:>9} sh_r={st.shuffle_read_bytes:>9}"
+                f" sh_w={st.shuffle_write_bytes:>9}  {st.name.split(' at ')[0]}"
             )
     print(f"  sum(job wall) {total_job_ms:.0f} ms; driver-side remainder "
           f"{wall*1000 - total_job_ms:.0f} ms (planning/collect gaps/noop commit)")
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")
     default_dir = "/tmp/ss_bench_opt_root_testdata_sf0.1"
     if not os.path.isdir(default_dir):
         default_dir = "/root/testdata/sf0.1"
@@ -98,7 +73,7 @@ def main() -> None:
 
     from __spark_entry__ import operators
 
-    spark = get_spark("profile_query", ui=True)
+    spark = get_spark("profile_query")
     spark.sparkContext.setLogLevel("ERROR")
     qs = operators()
     for name in sys.argv[1:]:

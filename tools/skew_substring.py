@@ -18,10 +18,10 @@ is gram-unique.  Every template gram therefore has df ≈ n_hot — each one
 is a hub gram whose window frame buffers n_hot rows in a single task.
 
 Reported: wall, output rows, and per-task max vs median executorRunTime
-of the window stage (UI REST taskSummary) — on a real cluster the max
-task IS the stage wall, so max/median is the number that must stay
-bounded (~10x per the verdict's done-criterion) for the shape to be
-called scale-safe.  Appends the measured row to SKEW.md.
+of the window stage (core status store, ``plans.instrument.job_profile``)
+— on a real cluster the max task IS the stage wall, so max/median is the
+number that must stay bounded (~10x per the verdict's done-criterion) for
+the shape to be called scale-safe.  Appends the measured row to SKEW.md.
 
 Usage: python tools/skew_substring.py [SF] [HOT_FRACTION]
   (defaults 10 and 0.03 → 500k docs, 15k hot)
@@ -31,11 +31,9 @@ from __future__ import annotations
 
 import os
 import sys
-import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.skew_sweep import _max_stage_id, _rest  # noqa: E402
 
 
 def build_corpus(spark, path: str, n_docs: int, hot_fraction: float) -> None:
@@ -68,6 +66,7 @@ def build_corpus(spark, path: str, n_docs: int, hot_fraction: float) -> None:
 
 def main() -> None:
     from supersonic_spark.pipeline import dedup
+    from supersonic_spark.plans.instrument import benchmark_operation, job_profile
     from supersonic_spark.session import get_spark
 
     sf = float(sys.argv[1]) if len(sys.argv) > 1 else 10.0
@@ -75,7 +74,7 @@ def main() -> None:
     n_docs = int(50_000 * sf)
     n_hot = int(n_docs * hot_fraction)
 
-    spark = get_spark("skew_substring", ui=True)
+    spark = get_spark("skew_substring")
     spark.sparkContext.setLogLevel("ERROR")
     path = f"/tmp/supersonic_scale/zipf_sub_sf{sf:g}_h{hot_fraction:g}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -83,35 +82,22 @@ def main() -> None:
         build_corpus(spark, path, n_docs, hot_fraction)
     docs = spark.read.parquet(path)
 
-    # warm run (codegen) and the row count, then the measured run: only
-    # the measured run's stages come after the mark
-    warm = dedup.substring_dup_spans(docs, "doc_id", "text")
-    warm.write.format("noop").mode("overwrite").save()
-    n_rows = warm.count()
-    mark = _max_stage_id(spark)
-    t0 = time.perf_counter()
-    out = dedup.substring_dup_spans(docs, "doc_id", "text")
-    out.write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
+    # warm run (codegen), then the measured run in a job group of its own:
+    # its row count comes from the same run, so no stage outside it is read
+    dedup.substring_dup_spans(docs, "doc_id", "text").write.format(
+        "noop").mode("overwrite").save()
+    run = benchmark_operation(f"skew_substring:{uuid.uuid4().hex}",
+                              dedup.substring_dup_spans(docs, "doc_id", "text"))
+    wall, n_rows = run.wall_sec, run.rows
 
     # per-task summary of every stage in the measured run; the window
     # stage is the one with the largest max task
-    rows = []
-    for st in _rest(spark, "/stages?status=COMPLETE"):
-        sid = st["stageId"]
-        if sid <= mark:
-            continue
-        try:
-            summ = _rest(
-                spark,
-                f"/stages/{sid}/{st['attemptId']}/taskSummary"
-                "?quantiles=0.5,1.0",
-            )
-        except (OSError, ValueError):  # HTTP/URL errors, bad JSON
-            continue
-        med, mx = summ["executorRunTime"]
-        rows.append((sid, st["numCompleteTasks"], med / 1000.0, mx / 1000.0))
-    rows.sort(key=lambda r: -r[3])
+    rows = sorted(
+        ((st.stage_id, st.num_complete_tasks, st.task_median_s, st.task_max_s)
+         for j in job_profile(spark, run.group) for st in j.stages
+         if st.status == "COMPLETE" and st.task_max_s is not None),
+        key=lambda r: -r[3],
+    )
     print(f"wall {wall:.2f}s, {n_rows} span rows; stages (by max task):")
     for sid, nt, med, mx in rows[:5]:
         ratio = mx / med if med > 0 else float("inf")
@@ -119,8 +105,8 @@ def main() -> None:
               f"max/med {ratio:.1f}x")
 
     if not rows:
-        sys.exit(f"no task summary for any stage after {mark} came back from "
-                 f"the UI REST API; SKEW.md not updated")
+        sys.exit(f"no stage summary for job group {run.group} came back from "
+                 f"the status store; SKEW.md not updated")
     sid, nt, med, mx = rows[0]
     ratio = mx / med if med > 0 else float("inf")
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -20,9 +20,10 @@ skew guard; this sweep builds the corpus that does:
 
 It then runs minhash_lsh_pairs twice — forced-unsalted vs
 ``skew_salt="auto"`` — asserts identical pair counts, and writes SKEW.md
-with the chosen salt, per-block bound, and the wall-clock A/B.  The
-unsalted run IS the failure mode being measured: its hot bucket is one
-task per band.
+with the chosen salt, per-block bound, and the wall-clock and max-task
+A/B (max task read from the core status store through
+``plans.instrument.job_profile``; the UI stays off).  The unsalted run
+IS the failure mode being measured: its hot bucket is one task per band.
 
 Usage: python tools/skew_sweep.py [SF] [HOT_FRACTION]
   (defaults 3 and 0.03; corpus cached under /tmp/supersonic_scale)
@@ -34,6 +35,7 @@ import math
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -64,49 +66,11 @@ def build_corpus(spark, path: str, n_docs: int, hot_fraction: float) -> None:
     docs.repartition(32).write.mode("overwrite").parquet(path)
 
 
-def _rest(spark, path: str):
-    import json as _json
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}{path}") as r:
-        return _json.load(r)
-
-
-def _max_stage_id(spark) -> int:
-    try:
-        return max((s["stageId"] for s in _rest(spark, "/stages")), default=-1)
-    except Exception:
-        return -1
-
-
-def _max_task_s(spark, after_stage_id: int) -> tuple[float, int]:
-    """(max executorRunTime across all tasks of stages with id > after, stageId).
-
-    The straggler metric: on local[32] total wall-clock is work-bound and
-    hides a single hot task; a 1000-executor cluster's wall-clock IS that
-    task.  Uses the UI REST taskSummary (quantile 1.0 = max) per stage.
-    """
-    best, best_sid = 0.0, -1
-    for st in _rest(spark, "/stages?status=COMPLETE"):
-        sid = st["stageId"]
-        if sid <= after_stage_id:
-            continue
-        try:
-            summ = _rest(spark, f"/stages/{sid}/{st['attemptId']}/taskSummary?quantiles=1.0")
-            run_ms = summ["executorRunTime"][0]
-        except Exception:
-            continue
-        if run_ms > best * 1000.0:
-            best, best_sid = run_ms / 1000.0, sid
-    return best, best_sid
-
-
 def main() -> None:
     from pyspark.sql import functions as F
 
     from supersonic_spark.pipeline import dedup
+    from supersonic_spark.plans.instrument import job_group, job_profile
     from supersonic_spark.session import get_spark
 
     sf = float(sys.argv[1]) if len(sys.argv) > 1 else 3.0
@@ -114,7 +78,7 @@ def main() -> None:
     n_docs = int(50_000 * sf)  # sf0.1 documents = 5k rows → sf1 = 50k
     n_hot = int(n_docs * hot_fraction)
 
-    spark = get_spark("skew_sweep", ui=True)
+    spark = get_spark("skew_sweep")
     spark.sparkContext.setLogLevel("ERROR")
     path = f"/tmp/supersonic_scale/zipf_sf{sf:g}_h{hot_fraction:g}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -135,32 +99,28 @@ def main() -> None:
         forced = os.environ.get("SKEW_SWEEP_G")
         salt = None if variant == "unsalted" else (
             int(forced) if forced else "auto")
-        mark = _max_stage_id(spark)
+        group = f"skew_sweep:{variant}:{uuid.uuid4().hex}"
         t0 = time.perf_counter()
-        n_pairs = dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.5, verify="estimate",
-            skew_salt=salt,
-        ).count()
+        with job_group(spark, group):
+            n_pairs = dedup.minhash_lsh_pairs(
+                docs, "doc_id", "text", threshold=0.5, verify="estimate",
+                skew_salt=salt,
+            ).count()
         wall = time.perf_counter() - t0
-        max_task, sid = _max_task_s(spark, mark)
-        print(f"max-task stage: {sid}")
+        # the straggler metric: on local[32] total wall-clock is work-bound
+        # and hides a single hot task; a 1000-executor cluster's wall-clock
+        # IS that task — max executorRunTime over the run's stages
+        stages = [st for j in job_profile(spark, group) for st in j.stages
+                  if st.status == "COMPLETE" and st.task_max_s is not None]
+        top = max(stages, key=lambda st: st.task_max_s, default=None)
+        max_task = top.task_max_s if top else 0.0
+        print(f"max-task stage: {top.stage_id if top else -1}")
         # per-stage breakdown for diagnosing WHERE a straggler lives
-        for st in sorted(_rest(spark, "/stages?status=COMPLETE"),
-                         key=lambda s: s["stageId"]):
-            if st["stageId"] <= mark:
-                continue
-            try:
-                summ = _rest(
-                    spark,
-                    f"/stages/{st['stageId']}/{st['attemptId']}/taskSummary"
-                    "?quantiles=0.5,1.0",
-                )
-                med, mx = (x / 1000.0 for x in summ["executorRunTime"])
-            except Exception:
-                continue
-            if mx >= 5.0:
-                print(f"stage {st['stageId']:4d}  tasks={st['numTasks']:5d}  "
-                      f"med={med:7.1f}s  max={mx:7.1f}s  {st['name'][:70]}")
+        for st in sorted(stages, key=lambda st: st.stage_id):
+            if st.task_max_s >= 5.0:
+                print(f"stage {st.stage_id:4d}  tasks={st.num_tasks:5d}  "
+                      f"med={st.task_median_s:7.1f}s  max={st.task_max_s:7.1f}s  "
+                      f"{st.name[:70]}")
         print(f"RESULT {json.dumps([wall, n_pairs, max_task])}")
         return
 
@@ -271,7 +231,7 @@ def main() -> None:
             f"band; salted, no task exceeds ({block_bound:,})², so stage time\n"
             "stays ∝ total-work/cores no matter how hot the template gets.\n"
             "Max task = max executorRunTime over every stage of the run\n"
-            "(Spark UI REST taskSummary, quantile 1.0).\n"
+            "(core status store task summary, quantile 1.0).\n"
         )
     print("wrote SKEW.md")
 
